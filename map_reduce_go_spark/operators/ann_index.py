@@ -112,8 +112,8 @@ def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
         .parquet(os.path.join(path, "corpus"))
     )
     # Codebook + marker: tmp+rename so a crashed build never half-commits
-    # (the kv_text sink's atomic-commit idiom; reference test-mr.sh's
-    # crash tolerance is the same contract).
+    # (the reference's atomic-rename commit, src/mr/worker.go:99,165;
+    # test-mr.sh's crash tolerance is the same contract).
     tmp = os.path.join(path, "centroids.json.tmp")
     with open(tmp, "w") as f:
         json.dump(centroids, f)

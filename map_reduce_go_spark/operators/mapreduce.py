@@ -12,18 +12,14 @@ hand-rolls — hash partitioning (src/mr/worker.go:24-28), shuffle files
 retries, atomic commit — delegated to Spark's shuffle, DAG scheduler, and
 output committer.
 
-Two execution strategies:
-
-- ``strategy="rdd"``: ``flatMap -> groupByKey(n_reduce) -> map(reduce_fn)``.
-  A literal realization of the reference dataflow. Each key's values are
-  materialized on one executor, exactly like a reference reduce task
-  (src/mr/worker.go:113-134) — same per-key memory bound, so the same
-  caveat applies at 100 TB: fine for bounded values-per-key, wrong for
-  giant hot keys.
-- ``strategy="pandas"``: Arrow-batched ``applyInPandas`` over a (key,value)
-  DataFrame. Keeps the logical plan visible to Catalyst/AQE (skewed key
-  groups get split shuffle-side) and moves data Python-side in columnar
-  batches instead of pickled rows — the scale path for Python hooks.
+One execution path, the reference dataflow verbatim: whole-file scan ->
+``flatMap(map_fn)`` -> ``groupByKey(n_reduce)`` (hash partition + group)
+-> ``map(reduce_fn)`` -> :func:`write_text_kv` ("key value" text files).
+Each key's values are materialized on one executor, exactly like a
+reference reduce task (src/mr/worker.go:113-134) — the same per-key memory
+bound, so the same caveat applies at 100 TB: fine for bounded
+values-per-key, wrong for giant hot keys (no Spark grouping operator splits
+one key's group; only joins get AQE skew splits).
 
 Prefer the native DataFrame queries in :mod:`.mrapps` whenever semantics
 allow; this module exists for arbitrary user hooks.
@@ -59,7 +55,6 @@ def map_reduce(
     map_fn: MapFn,
     reduce_fn: ReduceFn,
     n_reduce: int = 10,
-    strategy: str = "pandas",
 ) -> DataFrame:
     """Run a full MapReduce job; returns DataFrame(key string, value string).
 
@@ -68,39 +63,13 @@ def map_reduce(
     reduce-bucket count (nReduce=10, reference src/main/mrcoordinator.go:23);
     it sets shuffle partitioning, not output semantics.
     """
-    corpus = _as_corpus(spark, inputs)
-    if strategy == "rdd":
-        reduced = (
-            corpus.rdd.flatMap(lambda row: map_fn(row[0], row[1]))
-            .groupByKey(numPartitions=n_reduce)
-            .map(lambda kv: (kv[0], reduce_fn(kv[0], list(kv[1]))))
-        )
-        return spark.createDataFrame(reduced, KV_SCHEMA)
-    if strategy == "pandas":
-        import pandas as pd
-
-        def map_partition(batches):
-            for pdf in batches:
-                out_k, out_v = [], []
-                for fname, contents in zip(pdf["filename"], pdf["contents"]):
-                    for k, v in map_fn(fname, contents):
-                        out_k.append(k)
-                        out_v.append(v)
-                yield pd.DataFrame({"key": out_k, "value": out_v})
-
-        def reduce_group(pdf):
-            key = pdf["key"].iloc[0]
-            return pd.DataFrame(
-                {"key": [key], "value": [reduce_fn(key, list(pdf["value"]))]}
-            )
-
-        kv = corpus.mapInPandas(map_partition, schema=KV_SCHEMA)
-        return (
-            kv.repartition(n_reduce, "key")
-            .groupBy("key")
-            .applyInPandas(reduce_group, schema=KV_SCHEMA)
-        )
-    raise ValueError(f"unknown strategy {strategy!r}")
+    reduced = (
+        _as_corpus(spark, inputs)
+        .rdd.flatMap(lambda row: map_fn(row[0], row[1]))
+        .groupByKey(numPartitions=n_reduce)
+        .map(lambda kv: (kv[0], reduce_fn(kv[0], list(kv[1]))))
+    )
+    return spark.createDataFrame(reduced, KV_SCHEMA)
 
 
 def write_text_kv(df: DataFrame, path: str, n_partitions: int | None = None) -> None:
@@ -126,12 +95,32 @@ def write_text_kv(df: DataFrame, path: str, n_partitions: int | None = None) -> 
 
 import re
 
-_WORD_RE = re.compile(r"[^\W\d_]+", re.UNICODE)  # runs of letters, = \p{L}+
+# ``[^\W\d_]`` is \w minus digits and underscore: every \p{L} letter, but
+# also the non-decimal numerics (``²``, ``½``, ``Ⅻ``) that the reference's
+# unicode.IsLetter (src/mrapps/wc.go:21-24) and the native tokenizer
+# (functions/text.py) treat as separators — :func:`_words` splits those out.
+_WORD_RE = re.compile(r"[^\W\d_]+")
+
+
+def _words(contents: str) -> list[str]:
+    """Maximal runs of letters (``str.isalpha`` is exactly \\p{L}). The
+    regex does the bulk split in C; only the rare token holding a
+    non-decimal numeric is re-split character by character."""
+    words = _WORD_RE.findall(contents)
+    if all(map(str.isalpha, words)):
+        return words
+    out: list[str] = []
+    for w in words:
+        if w.isalpha():
+            out.append(w)
+        else:
+            out.extend("".join(c if c.isalpha() else " " for c in w).split())
+    return out
 
 
 def wc_map(filename: str, contents: str):
     """wc: emit (word, "1") per occurrence (reference src/mrapps/wc.go:19-32)."""
-    return [(w, "1") for w in _WORD_RE.findall(contents)]
+    return [(w, "1") for w in _words(contents)]
 
 
 def wc_reduce(key: str, values: list[str]) -> str:
@@ -140,7 +129,7 @@ def wc_reduce(key: str, values: list[str]) -> str:
 
 def indexer_map(filename: str, contents: str):
     """indexer: distinct words per doc (reference src/mrapps/indexer.go:20-31)."""
-    return [(w, filename) for w in sorted(set(_WORD_RE.findall(contents)))]
+    return [(w, filename) for w in sorted(set(_words(contents)))]
 
 
 def indexer_reduce(key: str, values: list[str]) -> str:

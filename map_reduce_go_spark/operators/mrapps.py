@@ -116,7 +116,7 @@ def generic_mapreduce_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_go_spark.operators.mapreduce import map_reduce, wc_map, wc_reduce
 
     corpus = corpus_from_documents(spark, sf_dir)
-    return map_reduce(spark, corpus, wc_map, wc_reduce, n_reduce=10, strategy="pandas")
+    return map_reduce(spark, corpus, wc_map, wc_reduce, n_reduce=10)
 
 
 @register(

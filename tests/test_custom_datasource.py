@@ -94,43 +94,3 @@ def test_stream_reader_one_batch(registered, tmp_path):
     assert [g[0] for g in got] == [w[0] for w in want]
     assert got == want
 
-
-def test_kv_text_writer_roundtrip_and_atomicity(registered, tmp_path):
-    """The kv_text writer must produce the reference's 'key value' line
-    format with one part file per partition and NO temp litter after
-    commit (the atomic-rename contract, reference src/mr/worker.go:83-99)."""
-    import glob
-    import os
-
-    from map_reduce_go_spark.sources.kvtext import KVTextDataSource
-
-    registered.dataSource.register(KVTextDataSource)
-    out = str(tmp_path / "mr-out")
-    df = registered.createDataFrame(
-        [("alpha", 3), ("beta", 1), ("gamma", 7), ("delta", 2)], ["key", "value"]
-    ).repartition(2)
-    df.write.format("kv_text").mode("append").option("path", out).save()
-
-    parts = sorted(glob.glob(f"{out}/part-*.txt"))
-    assert len(parts) == 2
-    assert not glob.glob(f"{out}/_tmp-*"), "temp files must not survive commit"
-    lines = []
-    for p in parts:
-        with open(p, encoding="utf-8") as f:
-            lines += [ln.rstrip("\n") for ln in f]
-    assert sorted(lines) == ["alpha 3", "beta 1", "delta 2", "gamma 7"]
-    # Files named by partition id + a per-job id (reference mr-out-N style,
-    # made append-safe across jobs).
-    names = [os.path.basename(p) for p in parts]
-    assert names[0].startswith("part-00000-") and names[1].startswith("part-00001-")
-
-    # A second append job must ADD part files, never clobber the first
-    # job's output (regression: partition-id-only names + os.replace
-    # silently overwrote earlier jobs).
-    df2 = registered.createDataFrame([("epsilon", 9)], ["key", "value"]).repartition(1)
-    df2.write.format("kv_text").mode("append").option("path", out).save()
-    all_lines = []
-    for p in sorted(glob.glob(f"{out}/part-*.txt")):
-        with open(p, encoding="utf-8") as f:
-            all_lines += [ln.rstrip("\n") for ln in f]
-    assert sorted(all_lines) == ["alpha 3", "beta 1", "delta 2", "epsilon 9", "gamma 7"]

@@ -6,6 +6,7 @@ A7 — SURVEY.md §5).
 """
 
 import os
+from pathlib import Path
 
 import pytest
 
@@ -23,27 +24,45 @@ def corpus(spark, sf_dir):
     return corpus_from_documents(spark, sf_dir).cache()
 
 
-@pytest.mark.parametrize("strategy", ["rdd", "pandas"])
-def test_generic_wordcount_matches_native(spark, sf_dir, corpus, strategy):
-    generic = kv_dict(
-        mr.map_reduce(spark, corpus, mr.wc_map, mr.wc_reduce, strategy=strategy)
-    )
+def test_generic_wordcount_matches_native(spark, sf_dir, corpus):
+    generic = kv_dict(mr.map_reduce(spark, corpus, mr.wc_map, mr.wc_reduce))
     native = {
         r["word"]: str(r["cnt"]) for r in wordcount(spark, sf_dir).collect()
     }
     assert generic == native
 
 
-@pytest.mark.parametrize("strategy", ["rdd", "pandas"])
-def test_generic_indexer_matches_native(spark, sf_dir, corpus, strategy):
-    generic = kv_dict(
-        mr.map_reduce(spark, corpus, mr.indexer_map, mr.indexer_reduce, strategy=strategy)
-    )
+def test_generic_indexer_matches_native(spark, sf_dir, corpus):
+    generic = kv_dict(mr.map_reduce(spark, corpus, mr.indexer_map, mr.indexer_reduce))
     native = {
         r["word"]: f"{r['doc_count']} {r['docs']}"
         for r in inverted_index(spark, sf_dir).collect()
     }
     assert generic == native
+
+
+def test_hook_tokenizer_matches_native_tokenize(spark):
+    """The Python hooks split words exactly like the native ``\\p{L}+``
+    tokenizer (the reference's unicode.IsLetter, src/mrapps/wc.go:21-24):
+    non-decimal numerics such as superscripts, vulgar fractions and Roman
+    numerals are separators, not letters."""
+    from map_reduce_go_spark.functions.text import tokenize
+
+    rows = [
+        ("f0", "x² ½ Ⅻ y"),
+        ("f1", "naïve café³rd Ⅷvⅸ ⑤five 42abc ½½ end_of Ωmega"),
+        ("f2", "plain words only plain"),
+    ]
+    df = spark.createDataFrame(rows, "filename string, contents string")
+    native = {
+        r["filename"]: r["words"]
+        for r in df.select("filename", tokenize("contents").alias("words")).collect()
+    }
+    for fname, contents in rows:
+        assert [w for w, _ in mr.wc_map(fname, contents)] == native[fname]
+        assert [w for w, _ in mr.indexer_map(fname, contents)] == sorted(
+            set(native[fname])
+        )
 
 
 def test_generic_crash_dataflow(spark, corpus):
@@ -91,6 +110,38 @@ def test_text_sink_co_partitions_by_key(spark, tmp_path):
     assert key_files and all(len(fs) == 1 for fs in key_files.values()), key_files
 
 
+@pytest.mark.parametrize(
+    "map_fn, reduce_fn",
+    [(mr.wc_map, mr.wc_reduce), (mr.indexer_map, mr.indexer_reduce)],
+    ids=["wc", "indexer"],
+)
+def test_file_path_inputs_match_sequential(spark, tmp_path, map_fn, reduce_fn):
+    """File-path inputs take the whole-file scan (one record per file, named
+    by its URI — the reference map-task contract, src/mr/worker.go:59-71)
+    and the written mr-out lines equal a sequential run (reference
+    src/main/test-mr.sh:78-103)."""
+    texts = {
+        "pg-a.txt": "The quick brown fox.\nThe lazy dog!",
+        "pg-b.txt": "A fox, a dog; and THE end\n",
+        "pg-c.txt": "café naïve x² ½ Ⅻ quick\n\nend",
+    }
+    files = []
+    for name, text in texts.items():
+        f = tmp_path / name
+        f.write_text(text, encoding="utf-8")
+        files.append(str(f))
+    out = str(tmp_path / "mr-out")
+    mr.write_text_kv(
+        mr.map_reduce(spark, files, map_fn, reduce_fn, n_reduce=3), out, n_partitions=3
+    )
+    got = sorted(r["value"] for r in spark.read.text(out).collect())
+
+    groups: dict[str, list[str]] = {}
+    for f in files:
+        for k, v in map_fn(Path(f).resolve().as_uri(), Path(f).read_text("utf-8")):
+            groups.setdefault(k, []).append(v)
+    assert got == sorted(f"{k} {reduce_fn(k, vs)}" for k, vs in groups.items())
+
 def test_map_parallelism_probe(spark):
     """A3/A4 analog: the scheduler really runs tasks in parallel."""
     assert spark.sparkContext.defaultParallelism >= 2
@@ -123,7 +174,7 @@ def test_jobcount_probe(spark, corpus):
         acc.add(1)
         return [("a", "x")]
 
-    df = mr.map_reduce(spark, corpus, counting_map, mr.early_exit_reduce, strategy="rdd")
+    df = mr.map_reduce(spark, corpus, counting_map, mr.early_exit_reduce)
     assert df.count() == 1
     assert acc.value == corpus.count()
 
@@ -144,10 +195,6 @@ def test_crash_recovery_probe(spark, corpus, tmp_path):
             raise RuntimeError("injected task failure")
         return mr.wc_map(fname, contents)
 
-    flaky = kv_dict(
-        mr.map_reduce(spark, corpus, flaky_map, mr.wc_reduce, strategy="rdd")
-    )
-    clean = kv_dict(
-        mr.map_reduce(spark, corpus, mr.wc_map, mr.wc_reduce, strategy="rdd")
-    )
+    flaky = kv_dict(mr.map_reduce(spark, corpus, flaky_map, mr.wc_reduce))
+    clean = kv_dict(mr.map_reduce(spark, corpus, mr.wc_map, mr.wc_reduce))
     assert flaky == clean

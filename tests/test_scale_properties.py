@@ -92,14 +92,11 @@ def corpora(draw):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(corpus=corpora())
-@pytest.mark.parametrize("strategy", ["rdd", "pandas"])
-def test_generic_engine_matches_python_reference(spark, corpus, strategy):
+def test_generic_engine_matches_python_reference(spark, corpus):
     df = spark.createDataFrame(corpus, schema="filename string, contents string")
     got = {
         r["key"]: r["value"]
-        for r in mr.map_reduce(
-            spark, df, mr.wc_map, mr.wc_reduce, n_reduce=4, strategy=strategy
-        ).collect()
+        for r in mr.map_reduce(spark, df, mr.wc_map, mr.wc_reduce, n_reduce=4).collect()
     }
     want = _python_mapreduce(corpus, mr.wc_map, mr.wc_reduce)
     assert got == want
